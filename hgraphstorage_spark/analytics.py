@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hgraphstorage_spark import schemas
 from hgraphstorage_spark.snapshot import GraphSnapshot
 
 
@@ -378,7 +379,9 @@ def shortest_paths(
         edges = edges.unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     edges = edges.persist()  # joined every hop
     spark = snap.nodes.sparkSession
-    seeds = spark.createDataFrame([(x, x, 0) for x in landmarks], "id long, landmark long, dist int")
+    seeds = schemas.local_frame(
+        spark, [(x, x, 0) for x in landmarks], "id long, landmark long, dist int"
+    )
     visited = seeds.localCheckpoint()
     frontier = visited
     for hop in range(1, max_hops + 1):
@@ -443,7 +446,7 @@ def bfs(snap: GraphSnapshot, source_id: int, max_hops: int = 10, labels: tuple =
         edges = edges.filter(F.col("label").isin(list(labels)))
     edges = edges.select("src", "dst").persist()  # probed every hop
     spark = snap.nodes.sparkSession
-    visited = spark.createDataFrame([(source_id, 0)], "id long, hops int").localCheckpoint()
+    visited = schemas.local_frame(spark, [(source_id, 0)], "id long, hops int").localCheckpoint()
     frontier = visited
     for hop in range(1, max_hops + 1):
         nxt = (
@@ -654,7 +657,7 @@ def strongly_connected_components(
     spark = snap.nodes.sparkSession
     edges_all = snap.edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct().localCheckpoint()
     remaining = snap.nodes.select("id").localCheckpoint()
-    assigned = spark.createDataFrame([], "id long, scc long")
+    assigned = schemas.local_frame(spark, [], "id long, scc long")
     for _ in range(max_outer):
         if remaining.limit(1).count() == 0:
             break
@@ -831,8 +834,8 @@ def weighted_shortest_paths(
         )
     ed = ed.persist()
     spark = snap.nodes.sparkSession
-    state = spark.createDataFrame(
-        [(x, x, 0) for x in landmarks], "id long, landmark long, cost long"
+    state = schemas.local_frame(
+        spark, [(x, x, 0) for x in landmarks], "id long, landmark long, cost long"
     ).localCheckpoint()
     for _ in range(rounds):
         relaxed = (
@@ -897,8 +900,8 @@ def betweenness(
         ed = ed.unionAll(ed.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     ed = ed.distinct().persist()
     spark = snap.nodes.sparkSession
-    visited = spark.createDataFrame(
-        [(x, x, 0, 1) for x in landmarks], "lm long, id long, dist int, sigma long"
+    visited = schemas.local_frame(
+        spark, [(x, x, 0, 1) for x in landmarks], "lm long, id long, dist int, sigma long"
     ).localCheckpoint()
     frontier = visited
     depth = 0
@@ -1111,8 +1114,8 @@ def diameter_estimate(
     spark = snap.nodes.sparkSession
     seed_row = snap.nodes.orderBy("id").limit(1).collect()
     if not seed_row:
-        return spark.createDataFrame(
-            [], "seed_id long, peripheral_id long, far_id long, diameter_estimate int"
+        return schemas.local_frame(
+            spark, [], "seed_id long, peripheral_id long, far_id long, diameter_estimate int"
         )
     seed = seed_row[0]["id"]
 
@@ -1125,12 +1128,14 @@ def diameter_estimate(
 
     peripheral, d1 = farthest(seed)
     if d1 <= 0:
-        return spark.createDataFrame(
+        return schemas.local_frame(
+            spark,
             [(seed, peripheral, peripheral, int(d1))],
             "seed_id long, peripheral_id long, far_id long, diameter_estimate int",
         )
     far, d2 = farthest(peripheral)
-    return spark.createDataFrame(
+    return schemas.local_frame(
+        spark,
         [(seed, peripheral, far, int(d2))],
         "seed_id long, peripheral_id long, far_id long, diameter_estimate int",
     )
@@ -1340,7 +1345,7 @@ def hyperball(
         )
         out.append((t, nf(regs)))
     spark = snap.nodes.sparkSession
-    return spark.createDataFrame(out, "round int, nf_est decimal(28,4)")
+    return schemas.local_frame(spark, out, "round int, nf_est decimal(28,4)")
 
 
 def hyperball_centrality(

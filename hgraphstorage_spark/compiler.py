@@ -123,12 +123,14 @@ class _State:
     def to_empty(self, as_kind: str) -> None:
         spark = self.snapshot.nodes.sparkSession
         if as_kind == KIND_NODES:
-            self.df = spark.createDataFrame([], schemas.NODES_SCHEMA)
+            self.df = schemas.local_frame(spark, [], schemas.NODES_SCHEMA)
         elif as_kind == KIND_EDGES:
-            self.df = spark.createDataFrame([], schemas.EDGES_SCHEMA)
+            self.df = schemas.local_frame(spark, [], schemas.EDGES_SCHEMA)
         else:
-            self.df = spark.createDataFrame(
-                [], "id long, kind string, label string, name string, seq int, dtype string, value string"
+            self.df = schemas.local_frame(
+                spark,
+                [],
+                "id long, kind string, label string, name string, seq int, dtype string, value string",
             )
         self.kind = KIND_EMPTY
         self.has_label_col = True

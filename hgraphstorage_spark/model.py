@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from hgraphstorage_spark import schemas
 from hgraphstorage_spark.snapshot import GraphSnapshot
 
 
@@ -70,8 +71,6 @@ class ModelDict:
         return nxt
 
     def note_property(self, name: str, value) -> int:
-        from hgraphstorage_spark import schemas
-
         return self.note("property_type", f"{name}:{schemas.infer_dtype(value)}")
 
     def fold_snapshot(self, snap: GraphSnapshot) -> None:
@@ -96,7 +95,7 @@ class ModelDict:
 
     def to_df(self, spark) -> DataFrame:
         rows = [(k, n, i) for (k, n), i in sorted(self._ids.items())]
-        return spark.createDataFrame(rows or [], "kind string, name string, type_id int")
+        return schemas.local_frame(spark, rows, "kind string, name string, type_id int")
 
 
 def model_to_string(model: DataFrame) -> str:
@@ -108,4 +107,4 @@ def model_to_string(model: DataFrame) -> str:
 def string_to_model(spark, s: str) -> DataFrame:
     """Inverse (reference ``stringToModel``)."""
     rows = [tuple(r) for r in json.loads(s)]
-    return spark.createDataFrame(rows, "kind string, name string, type_id int")
+    return schemas.local_frame(spark, rows, "kind string, name string, type_id int")

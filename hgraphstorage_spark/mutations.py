@@ -64,8 +64,8 @@ def add_nodes(
         ids = list(range(start, start + len(rows)))
     node_rows = [{"id": i, "label": label} for i, (label, _) in zip(ids, rows)]
     prop_rows = [r for i, (_, props) in zip(ids, rows) for r in _prop_rows(i, schemas.NODE_KIND, props)]
-    new_nodes = spark.createDataFrame(node_rows, schemas.NODES_SCHEMA)
-    new_props = spark.createDataFrame(prop_rows, schemas.PROPS_SCHEMA) if prop_rows else None
+    new_nodes = schemas.local_frame(spark, node_rows, schemas.NODES_SCHEMA)
+    new_props = schemas.local_frame(spark, prop_rows, schemas.PROPS_SCHEMA) if prop_rows else None
     out = replace(
         snap,
         nodes=snap.nodes.unionByName(new_nodes),
@@ -107,8 +107,8 @@ def add_edges(
         {"id": i, "src": src, "dst": dst, "label": label} for i, (src, dst, label, _) in zip(ids, rows)
     ]
     prop_rows = [r for i, (_, _, _, props) in zip(ids, rows) for r in _prop_rows(i, schemas.EDGE_KIND, props)]
-    new_edges = spark.createDataFrame(edge_rows, schemas.EDGES_SCHEMA)
-    new_props = spark.createDataFrame(prop_rows, schemas.PROPS_SCHEMA) if prop_rows else None
+    new_edges = schemas.local_frame(spark, edge_rows, schemas.EDGES_SCHEMA)
+    new_props = schemas.local_frame(spark, prop_rows, schemas.PROPS_SCHEMA) if prop_rows else None
     out = replace(
         snap,
         edges=snap.edges.unionByName(new_edges),
@@ -135,13 +135,13 @@ def update_node(snap: GraphSnapshot, node_id: int, label: str, props: Mapping[st
     we drop the old rows — same observable state
     (props-diff pinned by ``APITest.hs:112-127``)."""
     spark = snap.nodes.sparkSession
-    new_node = spark.createDataFrame([{"id": node_id, "label": label}], schemas.NODES_SCHEMA)
+    new_node = schemas.local_frame(spark, [(node_id, label)], schemas.NODES_SCHEMA)
     prop_rows = _prop_rows(node_id, schemas.NODE_KIND, props)
     kept_props = snap.props.filter(
         ~((F.col("owner_id") == node_id) & (F.col("owner_kind") == schemas.NODE_KIND))
     )
     new_props = (
-        kept_props.unionByName(spark.createDataFrame(prop_rows, schemas.PROPS_SCHEMA))
+        kept_props.unionByName(schemas.local_frame(spark, prop_rows, schemas.PROPS_SCHEMA))
         if prop_rows
         else kept_props
     )
@@ -210,5 +210,5 @@ def set_properties(
     )
     rows = _prop_rows(owner_id, owner_kind, {k: v for k, v in props.items() if v not in ([],)})
     if rows:
-        kept = kept.unionByName(spark.createDataFrame(rows, schemas.PROPS_SCHEMA))
+        kept = kept.unionByName(schemas.local_frame(spark, rows, schemas.PROPS_SCHEMA))
     return replace(snap, props=kept)

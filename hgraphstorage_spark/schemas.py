@@ -16,8 +16,10 @@ we bound it at DECIMAL(38,0) and document the divergence.
 from __future__ import annotations
 
 import json
+from collections.abc import Iterable, Mapping
 from decimal import Decimal
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 # dtype tags (reference DataType constructors)
@@ -119,3 +121,33 @@ def canonical_string(value) -> str:
     if dt == DT_BINARY:
         return bytes(value).hex()
     return json.dumps(value, sort_keys=True)
+
+
+def local_frame(spark: SparkSession, rows: Iterable, schema: T.StructType | str) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (dicts or tuples in schema
+    order) that the JVM holds as a ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` pickles the rows into a
+    ``defaultParallelism``-way PythonRDD, so every later read of a plan
+    that contains it runs one Python-worker task per slice, empty ones
+    included, until the plan is materialized. Here the rows go to the JVM
+    whole as one Arrow table (no rows: no hand-off at all), so mutation
+    deltas, empty tables and algorithm seed frames cost no Python task at
+    any read.
+    """
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.names
+    records = [r if isinstance(r, Mapping) else dict(zip(names, r)) for r in rows]
+    if not records:
+        # opening an engine builds three empty tables, and a session's first
+        # Arrow hand-off costs ~0.2-0.5 s of JVM-side set-up (4-core VM)
+        jspark = spark._jsparkSession
+        jdf = jspark.createDataFrame(spark._jvm.java.util.ArrayList(), jspark.parseDataType(schema.json()))
+        return DataFrame(jdf, spark)
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(records, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

@@ -1,6 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local test runs use ``local[$SPARK_GRAFT_CPUS]``; the same configs are the
+Local runs use ``local[$SPARK_GRAFT_CPUS]`` (default: the cores this
+process may run on) and a pinned driver heap of ``$SPARK_GRAFT_DRIVER_MEM``
+(default: fitted to the box, see ``_fitted_driver_mem``); the same configs are the
 ones we'd set cluster-side (AQE on, sensible shuffle partitioning, Arrow
 for the Pandas-UDF slow path).
 """
@@ -12,6 +14,31 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _fitted_driver_mem() -> str:
+    """Half the memory this process may use (the cgroup limit or
+    ``MemAvailable``, whichever is lower), at most 24g. The heap is pinned
+    (``-Xms``), so a default the box cannot reserve kills the JVM at
+    start-up instead of at its first large job."""
+    candidates = []
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                value = f.read().strip()
+        except OSError:
+            continue
+        if value.isdigit():
+            candidates.append(int(value))
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    candidates.append(int(line.split()[1]) * 1024)
+    except OSError:
+        candidates.append(os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE"))
+    mb = min(min(candidates) // 2, 24 * 1024**3) // 1024**2
+    return f"{max(mb, 512)}m"
+
+
 def get_spark(app_name: str = "hgraphstorage_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Create (or reuse) a SparkSession.
 
@@ -20,7 +47,8 @@ def get_spark(app_name: str = "hgraphstorage_spark", shuffle_partitions: int | N
     local mode we match the core count so tiny test shuffles don't fan out
     into hundreds of empty tasks.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _fitted_driver_mem()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (
@@ -41,7 +69,7 @@ def get_spark(app_name: str = "hgraphstorage_spark", shuffle_partitions: int | N
         # TIMESTAMP has identical wall-clock values to DuckDB's naive-as-UTC
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         # Pin the heap (-Xms == -Xmx): G1 UNCOMMITS heap pages back to
         # the OS after a full GC, so any explicit/periodic GC makes the
         # next allocation-heavy job re-fault and re-zero pages inside
@@ -51,10 +79,7 @@ def get_spark(app_name: str = "hgraphstorage_spark", shuffle_partitions: int | N
         # JVM hygiene, same flag cluster-side. (AlwaysPreTouch was
         # measured too — it removes first-touch cost but costs ~40 s of
         # session startup, so it stays off; first-touch is paid once.)
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-        )
+        .config("spark.driver.extraJavaOptions", "-Xms" + driver_mem)
         .config("spark.ui.enabled", "false")
         # bucketed tables (operators.bucketing) go through the catalog;
         # keep the warehouse out of the repo tree

@@ -109,7 +109,7 @@ class GraphSnapshot:
         except AnalysisException:
             if not os.path.isdir(path.removeprefix("file:")):
                 raise
-            return spark.createDataFrame([], schema)
+            return schemas.local_frame(spark, [], schema)
 
     @staticmethod
     def read(spark: SparkSession, path: str, version: int = 0) -> "GraphSnapshot":
@@ -132,8 +132,8 @@ class GraphSnapshot:
     @staticmethod
     def empty(spark: SparkSession) -> "GraphSnapshot":
         return GraphSnapshot(
-            nodes=spark.createDataFrame([], schemas.NODES_SCHEMA),
-            edges=spark.createDataFrame([], schemas.EDGES_SCHEMA),
-            props=spark.createDataFrame([], schemas.PROPS_SCHEMA),
+            nodes=schemas.local_frame(spark, [], schemas.NODES_SCHEMA),
+            edges=schemas.local_frame(spark, [], schemas.EDGES_SCHEMA),
+            props=schemas.local_frame(spark, [], schemas.PROPS_SCHEMA),
             version=0,
         )

@@ -530,7 +530,14 @@ def _durable_engine_cls():
                 # swap in the parquet-backed plan: bounded lineage for this
                 # process, and identical to what any other process reads
                 reread = GraphSnapshot.read(self.spark, full, version=v)
-                reread = replace(reread, index_registry=snapshot.index_registry)
+                # the parquet read knows no id high-water marks; carry them
+                # over so the next insert does not rescan for max(id)
+                reread = replace(
+                    reread,
+                    index_registry=snapshot.index_registry,
+                    max_node_id=snapshot.max_node_id,
+                    max_edge_id=snapshot.max_edge_id,
+                )
                 reread = self._rebuild_indexes(reread) if snapshot.index_registry else reread
                 snapshot = reread
             self._ledger.append(snapshot)

@@ -539,3 +539,61 @@ class TestVersionDiff:
         # an untouched entity has a single history entry
         hist2 = entity_history(eng, 2)
         assert len(hist2) == 1 and hist2[0]["props"]["year"] == ["1990"]
+
+
+class TestLocalDeltas:
+    """Driver-built frames (row-level deltas, empty tables) must be JVM
+    LocalRelations: a pickled-RDD delta runs one Python-worker task per
+    slice at every later read of the head until the next checkpoint."""
+
+    def test_local_frame_equals_create_dataframe(self, spark):
+        from hgraphstorage_spark import schemas
+        from hgraphstorage_spark.mutations import _prop_rows
+
+        values = {
+            "t": "héllo",
+            "big": 10**38 - 1,
+            "neg": -(10**38 - 1),
+            "b": b"\x00\xff",
+            "j": {"a": [1, None], "f": 1.5},
+            "flag": True,
+            "x": 2.25,
+            "nul": None,
+            "seq": ["a", "b", "c"],
+        }
+        dicts = _prop_rows(7, schemas.NODE_KIND, values)
+        names = schemas.PROPS_SCHEMA.names
+        tuples = [tuple(r[n] for n in names) for r in dicts]
+        want = spark.createDataFrame(dicts, schemas.PROPS_SCHEMA)
+        for rows in (dicts, tuples):
+            got = schemas.local_frame(spark, rows, schemas.PROPS_SCHEMA)
+            assert got.schema == want.schema
+            assert bag(got) == bag(want)
+
+        ddl = "kind string, name string, type_id int"
+        got = schemas.local_frame(spark, [("node", "P", 1)], ddl)
+        want = spark.createDataFrame([("node", "P", 1)], ddl)
+        assert got.schema == want.schema and bag(got) == bag(want)
+
+        empty = schemas.local_frame(spark, [], schemas.PROPS_SCHEMA)
+        assert empty.schema == schemas.PROPS_SCHEMA and empty.count() == 0
+
+    def test_row_level_deltas_are_local_table_scans(self, spark, tmp_path):
+        from hgraphstorage_spark import open_graph
+        from hgraphstorage_spark.plans.audit import executed_plan
+
+        eng = open_graph(spark, str(tmp_path), checkpoint_every=2)
+        eng.add_node("P", {"k": 0})
+        eng.commit()
+        eng.add_node("P", {"k": 1})
+        eng.commit()  # v2: checkpoint, the head is re-read from parquet
+        tx = eng.begin()
+        a = tx.add_node("P", {"k": 2})
+        e = tx.add_edge(a, a, "self", {"w": 1})
+        tx.set_properties(e, "edge", {"w": 2})
+        assert tx.commit() == 3  # op-log entry, not a checkpoint
+        head = eng.committed
+        for df in (head.nodes, head.edges, head.props):
+            plan = executed_plan(df)
+            assert "Scan ExistingRDD" not in plan, plan
+            assert "LocalTableScan" in plan, plan

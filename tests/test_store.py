@@ -284,6 +284,22 @@ class TestDurableEngine:
         ks = sorted(int(r["int_v"]) for r in b.current.props.filter("name = 'k'").collect())
         assert ks == list(range(7))
 
+    def test_checkpoint_keeps_id_high_water_marks(self, spark, root):
+        """The parquet re-read after a checkpoint commit keeps the id
+        high-water marks, so the next insert needs no max(id) scan."""
+        a = DurableGraphEngine(spark, root, checkpoint_every=2)
+        n1, n2 = a.add_nodes([("P", {}), ("P", {})])
+        a.add_edge(n1, n2, "knows")
+        a.commit()
+        n3 = a.add_node("P")
+        e2 = a.add_edge(n3, n1, "knows")
+        marks = (a.current.max_node_id, a.current.max_edge_id)
+        assert marks == (n3, e2)
+        assert a.commit() == 2 and a.ledger.read_entries()[-1]["snapshot"]
+        assert (a.committed.max_node_id, a.committed.max_edge_id) == marks
+        assert a.add_node("P") == n3 + 1
+        assert a.add_edge(n1, n3, "knows") == e2 + 1
+
     def test_compact_bounds_ledger_and_keeps_state(self, spark, root):
         """compact() folds history before the newest checkpoint: entries
         below the horizon vanish, data and post-horizon time travel
