@@ -509,7 +509,7 @@ def quantize_fixed_point(vec: Column) -> Column:
     return F.transform(vec, lambda x: F.floor(x.cast("double") * PLANE_SCALE).cast("long"))
 
 
-def quantized_bucket(qv: str, dims: int, bits: int, seed: int = 0, engine: str = "arrow") -> Column:
+def quantized_bucket(qv: str, dims: int, bits: int, seed: int = 0) -> Column:
     """Integer-exact random-hyperplane bucket for ``plane_mode="md5"``:
     bit p = sign(Σ_d qv[d]·plane(seed+p, d)) over the fixed-point vector.
 
@@ -517,45 +517,15 @@ def quantized_bucket(qv: str, dims: int, bits: int, seed: int = 0, engine: str =
     and overflow-free — even an engine that sums in doubles gets the exact
     integer (< 2^53). That removes the float-summation-order hazard that
     would make a float-dot bucket bit flip near zero between engines;
-    this is what makes the LSH op oracle-checkable.
+    this is what makes the LSH op oracle-checkable (the DuckDB oracle
+    replays it as an integer dot per plane over the same md5 plane ints).
 
-    Plane rows are array LITERALS (folded to constants by Catalyst), so
-    each bit is one `F.aggregate` over the dims with two element_at
-    lookups per term — measured at parity with the xxhash64 signature
-    fold on the bench, and O(bits) py4j calls to build (a fully unrolled
-    bits·dims Add chain costs ~15 s of driver-side Column construction).
-
-    Built as ONE generated-SQL expression (`F.expr`): the equivalent
-    Column-API construction (bits aggregates × 64-literal arrays per
-    table) costs ~2 s of py4j round trips PER CALL on the driver — the
-    SQL string is assembled in Python and parsed JVM-side in one call.
-
-    IMPORTANT: pass the NAME of a materialized ATTRIBUTE (own
-    projection), not an inline expression — no CSE inside HOF lambdas,
-    so an inline quantize expression would be re-evaluated per fold
-    element.
-
-    r13: evaluated as ONE vectorized Arrow UDF over the quantized
-    vector instead of the `aggregate`-HOF-per-bit SQL expression:
-    higher-order functions are CodegenFallback, so the fold ran
-    interpreted — per (row, bit, dim) lambda binding dominated the LSH
-    ops' wall (guide §4.2: hand whole batches to native code). The
-    int64 GEMM against the same md5 plane matrix is EXACT in any
-    summation order (|term| < 2^41, |sum| < 2^47 — no overflow), so
-    the bucket is bit-identical to the fold by integer associativity;
-    pinned by test_lsh_modes::test_quantized_bucket_stable's pure-
-    Python replay. The SQL-fold form remains available via
-    ``engine="sql"`` (the expression the DuckDB oracle mirrors)."""
-    if engine == "sql":
-        parts = []
-        for p in range(bits):
-            arr = ",".join(str(md5_plane_int(seed + p, d)) for d in range(dims))
-            parts.append(
-                f"(CASE WHEN aggregate(sequence(0,{dims - 1}), 0L,"
-                f" (acc, d) -> acc + element_at({qv}, d+1) * element_at(array({arr}), d+1))"
-                f" > 0 THEN {1 << p}L ELSE 0L END)"
-            )
-        return F.expr("(" + " + ".join(parts) + ")")
+    Evaluated as ONE vectorized Arrow UDF over the quantized vector (whole
+    batches go to native code, no per-element lambda): an int64 GEMM against the
+    driver-built (dims x bits) md5 plane matrix, exact in any summation
+    order, so the bucket is a pure function of (qv, seed) — pinned by
+    test_lsh_modes::test_quantized_bucket_stable's pure-Python replay.
+    ``qv`` is the NAME of the materialized quantized-vector column."""
     import numpy as np
 
     # plane matrix (dims x bits) of md5-derived ints — driver-side
@@ -578,8 +548,7 @@ def quantized_bucket(qv: str, dims: int, bits: int, seed: int = 0, engine: str =
         )
         S = A @ P  # exact int64 dot products
         out = ((S > 0).astype(np.int64) * weights).sum(axis=1)
-        # a NULL array folds to a NULL sum, whose CASE lands in the
-        # ELSE 0L branch per bit — bucket 0, reproduced by the zero fill
+        # a NULL vector has no positive dot: bucket 0 (the zero fill)
         return pd.Series(out, dtype="int64")
 
     return _bucket(F.col(qv))
@@ -589,14 +558,13 @@ _PLANE_MATRIX_CACHE: dict = {}
 
 
 def _xxhash_plane_matrix(dims: int, bits: int, seed: int):
-    """(dims x bits) float64 matrix of `_plane_component` values for the
-    Arrow signature path — fetched ONCE per (dims, bits, seed) per
-    process by constant-folding the SAME xxhash64 expressions the HOF
-    fold evaluates (a 1-row collect of pure literals; no input data is
-    involved, this is hash-family constant derivation, not result
-    caching). Collecting from the JVM rather than reimplementing
-    xxhash64 in Python guarantees the two paths share one hash family
-    bit-for-bit."""
+    """(dims x bits) float64 matrix of `_plane_component` values for
+    `signature_bits` — fetched ONCE per (dims, bits, seed) per process by
+    constant-folding the xxhash64 plane expressions (a 1-row collect of
+    pure literals; no input data is involved, this is hash-family
+    constant derivation, not result caching). Collecting from the JVM
+    rather than reimplementing xxhash64 in Python keeps the hash family
+    Spark's own, bit-for-bit."""
     key = (dims, bits, seed)
     m = _PLANE_MATRIX_CACHE.get(key)
     if m is None:
@@ -622,80 +590,57 @@ def _xxhash_plane_matrix(dims: int, bits: int, seed: int):
 
 def _plane_component(plane: Column, dim: Column) -> Column:
     """Deterministic pseudo-random hyperplane component in [-1, 1):
-    xxhash64(plane, dim) scaled. Same value on any executor — the plane
-    matrix never materializes. `plane`/`dim` are int columns (hash values
-    are type-sensitive; keep them IntegerType)."""
+    xxhash64(plane, dim) scaled. Same value on any executor. `plane`/`dim`
+    are int columns (hash values are type-sensitive; keep them
+    IntegerType)."""
     h = F.xxhash64(plane, dim)
     return (h % 1_000_003).cast("double") / 1_000_003.0
 
 
-def signature_bits(vec: "Column | str", dims: int, bits: int, seed: int = 0) -> Column:
-    """Random-hyperplane signature: bit i = sign(dot(vec, plane_i)).
-    Different `seed`s give independent plane sets (hash tables).
+def signature_bits(vec: str, dims: int, bits: int, seed: int = 0) -> Column:
+    """Random-hyperplane signature of the vector column NAMED ``vec``:
+    bit i = sign(dot(vec, plane_i)). Different `seed`s give independent
+    plane sets (hash tables).
 
-    Pass the NAME of the vector column (string) for the fast path: one
-    vectorized Arrow UDF (guide §4.2) that accumulates the per-bit dot
-    products as ``dims`` rank-1 numpy updates — ``acc += V[:, d] ⊗
-    P[d, :]`` for d ascending — so every (row, plane) dot performs the
-    IDENTICAL sequence of IEEE multiply-then-add operations as the
-    nested-HOF fold below (same ascending-dim left fold from 0.0, both
-    strict float64), and the signature is bit-identical (pinned by
+    One vectorized Arrow UDF that accumulates the per-bit dot products as
+    ``dims`` rank-1 numpy updates — ``acc += V[:, d] ⊗ P[d, :]`` for d
+    ascending — so every (row, plane) dot is the ascending-dim strict
+    float64 multiply-then-add left fold from 0.0, the same IEEE operation
+    sequence as a per-element SQL fold over ``_plane_component`` (pinned
+    bit-for-bit against that fold by
     test_lsh_modes::test_signature_unrolled_equals_fold). The plane
     matrix is fetched ONCE per (dims, bits, seed) per process from the
-    JVM itself (a 1-row constant-fold collect of the same
-    xxhash64 % 1000003 / 1000003.0 expressions the fold evaluates), so
-    the hash family cannot drift between the two paths.
-
-    Why not the fold for the hot paths: higher-order functions are
-    CodegenFallback, so the nested fold runs interpreted — per (row,
-    bit, dim) lambda binding plus a fresh xxhash64 per element. The
-    Column-argument form keeps the fold for callers that only hold a
-    derived Column (and as the reference implementation).
+    JVM itself (a 1-row constant-fold collect of the xxhash64 % 1000003 /
+    1000003.0 expressions), so the hash family is Spark's own xxhash64.
+    A NULL vector signs to 0.
     """
-    if isinstance(vec, str):
-        import numpy as np
+    import numpy as np
 
-        P = _xxhash_plane_matrix(dims, bits, seed)  # (dims x bits) float64
-        weights = np.array([1 << p for p in range(bits)], dtype=np.int64)
+    P = _xxhash_plane_matrix(dims, bits, seed)  # (dims x bits) float64
+    weights = np.array([1 << p for p in range(bits)], dtype=np.int64)
 
-        @F.pandas_udf("long")
-        def _sig(vs: pd.Series) -> pd.Series:
-            if len(vs) == 0:
-                return pd.Series([], dtype="int64")
-            mask = vs.isna().to_numpy()
-            fill = np.zeros(dims, dtype=np.float64)
-            A = np.vstack(
-                [
-                    (fill if m else np.asarray(v, dtype=np.float64)[:dims])
-                    for v, m in zip(vs.to_numpy(), mask)
-                ]
-            )
-            # ascending-dim rank-1 accumulation: per (row, plane) this is
-            # exactly acc = acc + (x_d * p_d) in float64, d = 0..dims-1 —
-            # the fold's operation sequence, vectorized across rows/planes
-            acc = np.zeros((A.shape[0], bits), dtype=np.float64)
-            for d in range(dims):
-                acc += np.multiply.outer(A[:, d], P[d])
-            out = ((acc > 0).astype(np.int64) * weights).sum(axis=1)
-            # NULL array: the fold's NULL sums skip every bitwiseOR — 0
-            return pd.Series(out, dtype="int64")
+    @F.pandas_udf("long")
+    def _sig(vs: pd.Series) -> pd.Series:
+        if len(vs) == 0:
+            return pd.Series([], dtype="int64")
+        mask = vs.isna().to_numpy()
+        fill = np.zeros(dims, dtype=np.float64)
+        A = np.vstack(
+            [
+                (fill if m else np.asarray(v, dtype=np.float64)[:dims])
+                for v, m in zip(vs.to_numpy(), mask)
+            ]
+        )
+        # ascending-dim rank-1 accumulation: per (row, plane) this is
+        # exactly acc = acc + (x_d * p_d) in float64, d = 0..dims-1,
+        # vectorized across rows/planes
+        acc = np.zeros((A.shape[0], bits), dtype=np.float64)
+        for d in range(dims):
+            acc += np.multiply.outer(A[:, d], P[d])
+        out = ((acc > 0).astype(np.int64) * weights).sum(axis=1)
+        return pd.Series(out, dtype="int64")
 
-        return _sig(F.col(vec))
-    one = F.lit(1).cast("long")
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(bits - 1)),
-        F.lit(0).cast("long"),
-        lambda acc, p: F.when(
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(dims - 1)),
-                F.lit(0.0),
-                lambda dacc, d: dacc
-                + F.element_at(vec, d + 1).cast("double") * _plane_component(p + F.lit(seed), d),
-            )
-            > 0,
-            acc.bitwiseOR(F.call_function("shiftleft", one, p)),
-        ).otherwise(acc),
-    )
+    return _sig(F.col(vec))
 
 
 def ivf_topk(
@@ -844,8 +789,7 @@ def label_centroids(
 
 
 def _assign_to_centroids(
-    frame: DataFrame, cent_rows: DataFrame, id_col: str, vec_col: str, out_col: str,
-    engine: str = "arrow",
+    frame: DataFrame, cent_rows: DataFrame, id_col: str, vec_col: str, out_col: str
 ) -> DataFrame:
     """Broadcast-centroid cosine argmax, ties to the smaller centroid id
     — the ONE assignment rule shared by ``kmeans_iterations`` (training)
@@ -853,78 +797,60 @@ def _assign_to_centroids(
     tie-break can never silently diverge between them (review catch).
     ``cent_rows``: (cid, cvec). Returns (vec_id, <out_col>).
 
-    r13 default is one vectorized Arrow projection (guide §4.2) instead
-    of explode×k + cosine-HOF + a vec_id-keyed shuffle: the k centroid
+    One vectorized Arrow projection over the vectors: the k centroid
     vectors (bounded — nlist/n_topics rows) are collected once at build
     and the per-row cosines accumulate as ascending-dim rank-1 numpy
-    updates, replaying the `cosine` fold's exact IEEE multiply-add
-    sequence per (row, centroid); the argmax replays `max_by(cid,
-    struct(csim, -cid))` — centroids scanned cid-ascending and
-    `np.argmax` keeps the FIRST maximum, with NaN greatest exactly like
-    Spark's double ordering. Bit-identical assignments wherever the
-    reference is defined (pinned by
-    test_pipeline.py::test_assign_to_centroids_arrow_equals_sql); the
-    one divergence is zero-norm vectors, where the SQL fold raises
-    DIVIDE_BY_ZERO under ANSI (Spark 4 default) while the Arrow path
-    keeps NaN-cosine semantics (NaN greatest, ties to smallest cid).
-    The explode+max_by form stays under ``engine="sql"`` as the
-    reference.
-    Removes one Exchange (the groupBy(vec_id) of n·k rows) from every
-    Lloyd round and every topic routing."""
-    if engine == "arrow":
-        import numpy as np
+    updates, the exact IEEE multiply-add sequence of the `cosine` fold
+    per (row, centroid); the argmax is ``max_by(cid, struct(csim,
+    -cid))`` — centroids scanned cid-ascending and `np.argmax` keeps the
+    FIRST maximum. Bit-identical to the explode + `cosine` + max_by
+    reference (pinned by
+    test_pipeline.py::test_assign_to_centroids_arrow_equals_sql). No
+    Exchange: the vectors never shuffle.
 
-        rows = sorted(cent_rows.select("cid", "cvec").collect(), key=lambda r: r.cid)
-        if rows:
-            cids = np.array([r.cid for r in rows], dtype=np.int64)
-            C = np.array([[float(x) for x in r.cvec] for r in rows], dtype=np.float64)
-            dims = C.shape[1]
-            cn_sq = np.zeros(len(rows), dtype=np.float64)
-            for d in range(dims):
-                cn_sq += C[:, d] * C[:, d]
-            cn = np.sqrt(cn_sq)
+    Zero-norm contract, shared with every SQL `cosine` consumer (which
+    raises DIVIDE_BY_ZERO under ANSI): a zero-norm vector or centroid
+    raises ValueError naming its id instead of being assigned."""
+    import numpy as np
 
-            @F.pandas_udf("long")
-            def _assign(vs: pd.Series) -> pd.Series:
-                if len(vs) == 0:
-                    return pd.Series([], dtype="int64")
-                A = np.vstack([np.asarray(v, dtype=np.float64) for v in vs.to_numpy()])
-                if A.shape[1] != dims:
-                    raise ValueError(
-                        f"vector dims {A.shape[1]} != centroid dims {dims}"
-                    )
-                acc = np.zeros((A.shape[0], len(cids)), dtype=np.float64)
-                rn_sq = np.zeros(A.shape[0], dtype=np.float64)
-                for d in range(dims):
-                    xd = A[:, d]
-                    acc += np.multiply.outer(xd, C[:, d])
-                    rn_sq += xd * xd
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    csim = acc / (np.sqrt(rn_sq)[:, None] * cn[None, :])
-                return pd.Series(cids[np.argmax(csim, axis=1)], dtype="int64")
-
-            return frame.select(
-                F.col(id_col).alias("vec_id"), _assign(F.col(vec_col)).alias(out_col)
-            )
-        # no centroids: the explode form yields no rows — reproduce that
+    rows = sorted(cent_rows.select("cid", "cvec").collect(), key=lambda r: r.cid)
+    if not rows:
+        # no centroids: no assignments
         return frame.select(F.col(id_col).alias("vec_id")).limit(0).withColumn(
             out_col, F.lit(None).cast("long")
         )
-    cents = cent_rows.groupBy().agg(F.collect_list(F.struct("cid", "cvec")).alias("cents"))
-    return (
-        frame.crossJoin(F.broadcast(cents))
-        .select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("_vec"),
-            F.explode("cents").alias("c"),
-        )
-        .select(
-            "vec_id",
-            F.col("c.cid").alias("cid"),
-            cosine(F.col("_vec"), F.col("c.cvec")).alias("csim"),
-        )
-        .groupBy("vec_id")
-        .agg(F.max_by("cid", F.struct(F.col("csim"), -F.col("cid"))).alias(out_col))
+    cids = np.array([r.cid for r in rows], dtype=np.int64)
+    C = np.array([[float(x) for x in r.cvec] for r in rows], dtype=np.float64)
+    dims = C.shape[1]
+    cn_sq = np.zeros(len(rows), dtype=np.float64)
+    for d in range(dims):
+        cn_sq += C[:, d] * C[:, d]
+    cn = np.sqrt(cn_sq)
+
+    @F.pandas_udf("long")
+    def _assign(ids: pd.Series, vs: pd.Series) -> pd.Series:
+        if len(vs) == 0:
+            return pd.Series([], dtype="int64")
+        A = np.vstack([np.asarray(v, dtype=np.float64) for v in vs.to_numpy()])
+        if A.shape[1] != dims:
+            raise ValueError(f"vector dims {A.shape[1]} != centroid dims {dims}")
+        acc = np.zeros((A.shape[0], len(cids)), dtype=np.float64)
+        rn_sq = np.zeros(A.shape[0], dtype=np.float64)
+        for d in range(dims):
+            xd = A[:, d]
+            acc += np.multiply.outer(xd, C[:, d])
+            rn_sq += xd * xd
+        zero = np.flatnonzero(rn_sq == 0)
+        if len(zero):
+            raise ValueError(f"zero-norm vector {id_col}={ids.iloc[zero[0]]}: cosine undefined")
+        zero = np.flatnonzero(cn == 0)
+        if len(zero):
+            raise ValueError(f"zero-norm centroid cid={cids[zero[0]]}: cosine undefined")
+        csim = acc / (np.sqrt(rn_sq)[:, None] * cn[None, :])
+        return pd.Series(cids[np.argmax(csim, axis=1)], dtype="int64")
+
+    return frame.select(
+        F.col(id_col).alias("vec_id"), _assign(F.col(id_col), F.col(vec_col)).alias(out_col)
     )
 
 
@@ -954,7 +880,6 @@ def kmeans_iterations(
     iterations: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_engine: str = "arrow",
 ) -> DataFrame:
     """Lloyd k-means over cosine similarity: deterministic init (the
     ``nlist`` smallest-id vectors), then ``iterations`` rounds of
@@ -962,9 +887,9 @@ def kmeans_iterations(
     offline training step behind ``ivf_topk``'s inverted lists.
     Returns the final assignment (vec_id, list_id).
 
-    Scale shape per round: one pass over the data against BROADCAST
-    centroids (explode-the-small-side + max_by argmax, no shuffle of the
-    vectors — ``_assign_to_centroids``), then a centroid update keyed by
+    Scale shape per round: one pass over the data against the collected
+    centroids (a vectorized argmax, no shuffle of the vectors —
+    ``_assign_to_centroids``), then a centroid update keyed by
     (list, dim) (``_centroid_update``). A cluster that loses all members
     disappears (standard Lloyd degeneracy; a production run would
     re-seed it).
@@ -974,15 +899,11 @@ def kmeans_iterations(
         .limit(nlist)
         .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
     )
-    assigned = _assign_to_centroids(
-        embeddings, cents, id_col, vec_col, "list_id", engine=assign_engine
-    )
+    assigned = _assign_to_centroids(embeddings, cents, id_col, vec_col, "list_id")
     vecs = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_v"))
     for _ in range(iterations - 1):
         new_cents = _centroid_update(assigned, vecs, "list_id").localCheckpoint()
-        assigned = _assign_to_centroids(
-            embeddings, new_cents, id_col, vec_col, "list_id", engine=assign_engine
-        )
+        assigned = _assign_to_centroids(embeddings, new_cents, id_col, vec_col, "list_id")
     return assigned
 
 
@@ -1971,7 +1892,7 @@ def topic_clusters(
     Returns (doc_id, topic) for every doc with at least one token.
 
     Scale shape: the vector build never shuffles tokens (see
-    tfidf_vectors); each Lloyd round is one pass against BROADCAST
+    tfidf_vectors); each Lloyd round is one pass against the collected
     centroids plus a (topic, dim)-keyed skew-free update. The vector
     frame is persisted once (init + every round's assignment and update
     all read it). Integer-quantized weights make centroid means exact
@@ -1986,8 +1907,7 @@ def topic_clusters(
         )
     )
     assigned = kmeans_iterations(
-        vecs, nlist=n_topics, iterations=iterations, id_col="doc_id", vec_col="v",
-        assign_engine="sql",
+        vecs, nlist=n_topics, iterations=iterations, id_col="doc_id", vec_col="v"
     )
     return assigned.select(F.col("vec_id").alias(id_col), F.col("list_id").alias("topic"))
 
@@ -2052,17 +1972,16 @@ def topic_model(
     from hgraphstorage_spark.pipeline.state import track
     from hgraphstorage_spark.pipeline.text import _tf_frame, tfidf_apply, tfidf_idf_table
 
-    # ONE tokenize+fold pass: the persisted tf frame feeds both the idf
+    # ONE tokenize+count pass: the persisted tf frame feeds both the idf
     # table and the vectorization (review catch — the naive composition
-    # ran the O(d·tokens) fold twice over the training corpus)
+    # tokenized and counted the training corpus twice)
     tf = _tf_frame(docs, d, text_col, id_col, hash_mode)
     idf = track(tfidf_idf_table(docs, d, text_col, id_col, hash_mode, tf_frame=tf))
     vecs = track(
         tfidf_apply(docs, idf, d, scale, text_col, id_col, hash_mode, tf_frame=tf)
     )
     assigned = kmeans_iterations(
-        vecs, nlist=n_topics, iterations=iterations, id_col="doc_id", vec_col="v",
-        assign_engine="sql",
+        vecs, nlist=n_topics, iterations=iterations, id_col="doc_id", vec_col="v"
     )
     cents = _centroid_update(
         assigned, vecs.select(F.col("doc_id").alias("vec_id"), F.col("v").alias("_v")), "list_id"
@@ -2087,14 +2006,14 @@ def topic_assign(
     Returns (doc_id, topic) for every doc with at least one token.
 
     Scale shape: one narrow vectorize pass against the broadcast idf
-    array, one broadcast-centroid explode + argmax — nothing data-sized
-    shuffles."""
+    array, one vectorized argmax against the collected centroids —
+    nothing data-sized shuffles. A doc whose vector has zero norm (every
+    token bucket has idf 0) raises ValueError, as cosine is undefined
+    there (``_assign_to_centroids``)."""
     from hgraphstorage_spark.pipeline.text import tfidf_apply
 
     vecs = tfidf_apply(docs, idf_table, d, scale, text_col, id_col, hash_mode)
     cent_rows = centroids.select(F.col("topic").alias("cid"), "cvec")
-    return _assign_to_centroids(
-        vecs, cent_rows, "doc_id", "v", "topic", engine="sql"
-    ).select(
+    return _assign_to_centroids(vecs, cent_rows, "doc_id", "v", "topic").select(
         F.col("vec_id").alias(id_col), "topic"
     )

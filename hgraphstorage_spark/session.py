@@ -73,7 +73,7 @@ def get_spark(app_name: str = "hgraphstorage_spark", shuffle_partitions: int | N
         # Pin the heap (-Xms == -Xmx): G1 UNCOMMITS heap pages back to
         # the OS after a full GC, so any explicit/periodic GC makes the
         # next allocation-heavy job re-fault and re-zero pages inside
-        # its own runtime (measured r13, tools/gc_tax_probe.py: ~+0.4 s
+        # its own runtime (measured r13, OPTIMIZATION_r13.md: ~+0.4 s
         # on sub-second queries right after a System.gc() with an
         # unpinned heap; flat with the pin). Standard long-lived-server
         # JVM hygiene, same flag cluster-side. (AlwaysPreTouch was

@@ -562,9 +562,9 @@ def stream_embed_dedup(
     agree on the signature SET always).
 
     The signature is ``pipeline.similarity.signature_bits`` — the SAME
-    narrow zero-shuffle expression the batch LSH ops bucket on, with
+    narrow zero-shuffle Arrow UDF the batch LSH ops bucket on, with
     planes derived from xxhash64(plane, dim) so no plane matrix is ever
-    stored or shipped. Two vectors at angle θ share the full signature
+    stored (it is rebuilt from the seed). Two vectors at angle θ share the full signature
     with probability (1 − θ/π)^bits: near-identical embeddings (re-runs
     of the same content through the same encoder, θ ≈ 0) collapse with
     high probability, genuinely different ones survive. This is
@@ -578,7 +578,7 @@ def stream_embed_dedup(
 
     ``plane_mode="md5"`` signs with the integer-exact fixed-point
     md5-plane bucket (``similarity.quantized_bucket``) instead of the
-    xxhash64 float fold — the same dual-mode contract as
+    xxhash64 float planes — the same dual-mode contract as
     ``embedding_near_dup_lsh``: bit-identical in any engine, so a
     DuckDB oracle replays the signature set."""
     if plane_mode == "md5":

@@ -119,11 +119,12 @@ def test_quantized_bucket_stable(spark):
 
 
 def test_signature_unrolled_equals_fold(spark):
-    """The r13 Arrow signature path (string-name arg) must be bit-identical
-    to the nested-HOF fold (Column arg): same xxhash64 planes (fetched from
-    the JVM itself), same ascending-dim IEEE multiply-add sequence per
+    """The Arrow signature kernel must be bit-identical to the nested-HOF
+    fold (tests/kernel_folds.py): same xxhash64 planes (fetched from the
+    JVM itself), same ascending-dim IEEE multiply-add sequence per
     (row, plane), same sign rule."""
     from hgraphstorage_spark.pipeline.similarity import signature_bits
+    from tests.kernel_folds import signature_fold
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
         "vec_id",
@@ -133,7 +134,7 @@ def test_signature_unrolled_equals_fold(spark):
         got = emb.select(
             "vec_id",
             signature_bits("v", dims=64, bits=5, seed=seed).alias("s_unrolled"),
-            signature_bits(F.col("v"), dims=64, bits=5, seed=seed).alias("s_fold"),
+            signature_fold(F.col("v"), dims=64, bits=5, seed=seed).alias("s_fold"),
         ).collect()
         assert len(got) > 0
         for r in got:

@@ -4352,10 +4352,13 @@ class TestFIMTransform:
 
 class TestAssignToCentroidsArrow:
     def test_assign_to_centroids_arrow_equals_sql(self, spark):
-        """The r13 Arrow assignment path must reproduce the explode+max_by
-        form row-for-row: same IEEE cosine bits (ascending-dim fold order),
-        NaN-greatest ordering (zero vectors), first-max = smallest-cid ties."""
+        """The Arrow assignment kernel must reproduce the explode+max_by
+        SQL fold (tests/kernel_folds.py) row-for-row: same IEEE cosine bits
+        (ascending-dim fold order), first-max = smallest-cid ties; and a
+        zero-norm vector or centroid raises, as the fold does under ANSI."""
         from hgraphstorage_spark.pipeline.similarity import _assign_to_centroids
+        from hgraphstorage_spark.pipeline.text import tfidf_vectors
+        from tests.kernel_folds import assign_fold
 
         emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
         cents = (
@@ -4363,8 +4366,21 @@ class TestAssignToCentroidsArrow:
             .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
         )
         a = _assign_to_centroids(emb, cents, "vec_id", "embedding", "list_id")
-        s = _assign_to_centroids(emb, cents, "vec_id", "embedding", "list_id", engine="sql")
+        s = assign_fold(emb, cents, "vec_id", "embedding", "list_id")
         assert bag(a) == bag(s)
+
+        # integer-valued array<double> vectors: the topic paths' v =
+        # floor(tf·idf·scale), many exact cosine ties between documents
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        for mode in ("xxhash64", "md5"):
+            tv = tfidf_vectors(docs, d=16, hash_mode=mode)
+            tc = (
+                tv.orderBy("doc_id").limit(5)
+                .select(F.col("doc_id").alias("cid"), F.col("v").alias("cvec"))
+            )
+            a = _assign_to_centroids(tv, tc, "doc_id", "v", "topic")
+            s = assign_fold(tv, tc, "doc_id", "v", "topic")
+            assert bag(a) == bag(s) and len(bag(a)) > 0
 
         # adversarial ties: exact duplicates of a centroid (csim tie across
         # duplicate centroids must break to the smaller cid in both paths)
@@ -4382,36 +4398,43 @@ class TestAssignToCentroidsArrow:
         vf = spark.createDataFrame(rows, "vec_id long, v array<double>")
         cf = spark.createDataFrame(cent, "cid long, cvec array<double>")
         a2 = _assign_to_centroids(vf, cf, "vec_id", "v", "list_id")
-        s2 = _assign_to_centroids(vf, cf, "vec_id", "v", "list_id", engine="sql")
+        s2 = assign_fold(vf, cf, "vec_id", "v", "list_id")
         assert bag(a2) == bag(s2)
         assert {r.vec_id: r.list_id for r in a2.collect()}[4] == 10
 
-        # zero-norm vectors: the SQL fold raises DIVIDE_BY_ZERO under ANSI
-        # (Spark 4 default), so the reference is undefined there; the Arrow
-        # path keeps numpy's NaN cosines, where NaN sorts greatest and ties
-        # break to the smallest cid — pin that documented behavior
+        # zero-norm vectors: cosine is undefined. The SQL fold raises
+        # DIVIDE_BY_ZERO under ANSI (Spark 4 default); the kernel raises a
+        # ValueError naming the row instead of picking an arbitrary cid
         zf = spark.createDataFrame(
             [(3, [0.0, 0.0, 0.0, 0.0])], "vec_id long, v array<double>"
         )
-        az = _assign_to_centroids(zf, cf, "vec_id", "v", "list_id")
-        assert [r.list_id for r in az.collect()] == [10]
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            assign_fold(zf, cf, "vec_id", "v", "list_id").collect()
+        with pytest.raises(Exception, match="zero-norm vector vec_id=3"):
+            _assign_to_centroids(zf, cf, "vec_id", "v", "list_id").collect()
+        zc = spark.createDataFrame([(10, [0.0, 0.0, 0.0, 0.0])], "cid long, cvec array<double>")
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            assign_fold(vf, zc, "vec_id", "v", "list_id").collect()
+        with pytest.raises(Exception, match="zero-norm centroid cid=10"):
+            _assign_to_centroids(vf, zc, "vec_id", "v", "list_id").collect()
 
 
 class TestWithSignatureArrow:
     def test_with_signature_arrow_equals_fold(self, spark):
-        """The r13 Arrow k-permutation min must reproduce the nested
-        transform+array_min fold exactly: every permutation value is
-        integer arithmetic < 2^37 mod a 31-bit prime, so there is no
-        float anywhere to diverge. Real corpus, both hash modes, plus
-        empty/NULL shingle arrays (array_min(empty) is a NULL element
-        per permutation)."""
+        """The Arrow k-permutation min must reproduce the nested
+        transform+array_min fold (tests/kernel_folds.py) exactly: every
+        permutation value is integer arithmetic < 2^37 mod a 31-bit prime,
+        so there is no float anywhere to diverge. Real corpus, both hash
+        modes, plus empty/NULL shingle arrays (array_min(empty) is a NULL
+        element per permutation)."""
         from hgraphstorage_spark.pipeline.dedup import _with_signature, shingle_hashes
+        from tests.kernel_folds import with_signature_fold
 
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
         for mode in ("xxhash64", "md5"):
             sh = shingle_hashes(docs, "text", "doc_id", 5, mode)
             a = _with_signature(sh, 16, mode).select("doc_id", "sig")
-            s = _with_signature(sh, 16, mode, engine="sql").select("doc_id", "sig")
+            s = with_signature_fold(sh, 16, mode).select("doc_id", "sig")
             assert bag(a) == bag(s)
 
         adv = spark.createDataFrame(
@@ -4419,7 +4442,7 @@ class TestWithSignatureArrow:
             "doc_id long, sh array<long>",
         )
         a = _with_signature(adv, 8, "xxhash64").select("doc_id", "sig")
-        s = _with_signature(adv, 8, "xxhash64", engine="sql").select("doc_id", "sig")
+        s = with_signature_fold(adv, 8, "xxhash64").select("doc_id", "sig")
         ra, rs = bag(a), bag(s)
         assert ra == rs
         by_id = {r[0]: r[1] for r in ra}
@@ -4428,19 +4451,23 @@ class TestWithSignatureArrow:
 
 class TestTfFrameArrow:
     def test_tf_frame_arrow_equals_fold(self, spark):
-        """The r13 Arrow bincount path must reproduce the aggregate-fold
-        bit-for-bit: counts are exact small integers in float64, and the
-        bucket hashes stay JVM-side in both engines, so the only thing
-        that could diverge is the counting itself. Both hash modes, real
-        corpus + adversarial rows (NULL / empty / whitespace-only text
-        must be excluded identically; d=1 collapses every token to one
-        bucket)."""
+        """The Arrow bincount kernel must reproduce the aggregate-fold
+        (tests/kernel_folds.py) bit-for-bit: counts are exact small
+        integers in float64, and the bucket hashes stay JVM-side, so the
+        only thing that could diverge is the counting itself. Both hash
+        modes, real corpus + adversarial rows (NULL / empty /
+        whitespace-only text must be excluded identically; d=1 collapses
+        every token to one bucket). The plan must evaluate the counts in
+        Python (ArrowEvalPython), so a silent switch of the production
+        path fails here."""
         from hgraphstorage_spark.pipeline.text import _tf_frame
+        from tests.kernel_folds import tf_frame_fold
 
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
         for mode in ("xxhash64", "md5"):
             a = _tf_frame(docs, 64, "text", "doc_id", mode, persist=False)
-            s = _tf_frame(docs, 64, "text", "doc_id", mode, persist=False, engine="sql")
+            assert "ArrowEvalPython" in a._jdf.queryExecution().executedPlan().toString()
+            s = tf_frame_fold(docs, 64, "text", "doc_id", mode)
             assert bag(a) == bag(s)
 
         adv = spark.createDataFrame(
@@ -4456,7 +4483,7 @@ class TestTfFrameArrow:
         )
         for d in (1, 8):
             a = _tf_frame(adv, d, "text", "doc_id", "xxhash64", persist=False)
-            s = _tf_frame(adv, d, "text", "doc_id", "xxhash64", persist=False, engine="sql")
+            s = tf_frame_fold(adv, d, "text", "doc_id", "xxhash64")
             ra, rs = bag(a), bag(s)
             assert ra == rs
             assert {r[0] for r in ra} == {1, 5, 6}  # NULL/empty/ws-only excluded
